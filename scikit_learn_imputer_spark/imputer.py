@@ -11,14 +11,22 @@ split of the observed rows, and writes predictions into the missing cells.
 Spark-first design decisions (NOT a port):
 - Tables are lazy DataFrames with an explicit ``id`` key column — the pandas
   index (reference :38) has no distributed equivalent; all row addressing is
-  key equi-joins, and the scatter write-back (reference :272) is
-  join+coalesce (operators/update.py).
+  key equi-joins, and the scatter write-back (reference :272) is ONE left
+  join + coalesce for every imputed column at once. Each model scores only
+  its own column's missing rows; the predictions are merged by id into one
+  update side, broadcast only when its profiled bound (Σ missing cells ×
+  row size) fits ``spark.sql.autoBroadcastJoinThreshold``.
 - Missing values are native SQL NULLs — the reference's ``-1234`` sentinel
   (reference :223) is an implementation artifact that would corrupt data and
   is deliberately NOT replicated (SURVEY.md §7.3 #4).
-- The feature matrix is built once, min-max scaled, and CACHED — it is
-  re-read once per imputed column (the reference copies it per column,
-  :235).
+- The input is profiled once (``_profile``: row total, per-column observed
+  counts, continuous min/max, capped categorical domains — one bounded
+  Spark action). The profile answers every question the reference asks of
+  the table again: the cardinality gate, the one-hot domains, which
+  columns to impute, the target labels and the scaler's ranges.
+- The feature matrix is built and min-max scaled in one pass and
+  materialized once; every per-column fit reads it (the reference copies
+  it per column, :235).
 - Models are MLlib Pipelines (VectorAssembler + user estimator), persisted
   with MLlib writers + a JSON manifest instead of a joblib pickle
   (reference :297).
@@ -39,8 +47,10 @@ from __future__ import annotations
 import json
 import os
 import time
+from contextlib import contextmanager
+from functools import reduce
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from scikit_learn_imputer_spark.functions.stats import (
@@ -49,7 +59,6 @@ from scikit_learn_imputer_spark.functions.stats import (
     imputation_variance_long,
 )
 from scikit_learn_imputer_spark.operators.encode import (
-    distinct_values,
     label_decode,
     label_encode,
     one_hot,
@@ -61,7 +70,6 @@ from scikit_learn_imputer_spark.operators.missing import (
 )
 from scikit_learn_imputer_spark.operators.scale import minmax_scale
 from scikit_learn_imputer_spark.operators.split import split_exact
-from scikit_learn_imputer_spark.operators.update import scatter_update
 
 
 class SparkImputer:
@@ -155,27 +163,45 @@ class SparkImputer:
         """ffill/bfill → cardinality prune → one-hot → optional missing
         flags (reference :140-176). Returns a flat numeric frame keyed by
         id — flat named columns keep it oracle-checkable."""
-        cols = (
-            [c for c in self.features if c != self.id_col]
-            if self.features
-            else self._data_cols()
-        )
+        return self._features(self._profile())[0]
+
+    def _features(
+        self, profile: dict, missing: dict | None = None
+    ) -> tuple[DataFrame, dict]:
+        """``create_features`` from a profile, plus every feature column's
+        exact ``(min, max)`` for ``minmax_scale(ranges=...)``. ffill/bfill
+        only copies observed values, so a filled column has the observed
+        value set: the profile's domains and min/max hold for it.
+
+        ``missing`` maps target columns to flag names: each target's
+        is-null flag rides along, unscaled, after the features, so the
+        write-back selects a column's missing rows from the feature matrix
+        without a join."""
+        missing = missing or {}
+        cols = self._feature_cols()
         categorical = [c for c in self.categorical if c in cols]
-        df = self.input_data.select(self.id_col, *cols)
+        domains = profile["domains"]
+        ranges = {c: profile["ranges"][c] for c in cols if c not in categorical}
+        df = self.input_data.select(
+            self.id_col,
+            *cols,
+            *[F.col(c).isNull().alias(flag) for c, flag in missing.items()],
+        )
 
-        filled = ffill_bfill(df, self.id_col, cols)
+        with _job_phase(df.sparkSession, "imputer:features"):
+            filled = ffill_bfill(df, self.id_col, cols)
 
-        if categorical:
-            cards = filled.agg(
-                *[F.countDistinct(F.col(c)).alias(c) for c in categorical]
-            ).collect()[0]
-            too_many = [c for c in categorical if cards[c] > self.class_threshold]
-        else:
-            too_many = []
+        too_many = [c for c in categorical if len(domains[c]) > self.class_threshold]
         keep_cats = [c for c in categorical if c not in too_many]
         filled = filled.drop(*too_many)
 
-        encoded = one_hot(filled, keep_cats)
+        encoded = one_hot(filled, keep_cats, values={c: domains[c] for c in keep_cats})
+        # one_hot appends the dummies after the passthrough columns, in
+        # (column, sorted value) order.
+        dummies = encoded.columns[len(filled.columns) - len(keep_cats):]
+        sizes = [len(domains[c]) for c in keep_cats for _ in domains[c]]
+        for name, size in zip(dummies, sizes):
+            ranges[name] = (0.0 if size > 1 else 1.0, 1.0)
 
         if self.include_missing_flags:
             flags = self.missing_indicator()
@@ -186,17 +212,122 @@ class SparkImputer:
             ]
             flags_int = flags.select(F.col(self.id_col), *flag_cols)
             encoded = encoded.join(flags_int, on=self.id_col, how="inner")
+            total = profile["total"]
+            for c in self._data_cols():
+                observed = profile["observed"][c]
+                ranges[f"{c}_flag"] = (
+                    (float(observed == 0), float(observed < total))
+                    if total
+                    else (None, None)
+                )
 
         # Cast everything numeric to double so the assembled vector is
         # homogeneous and the scaler is a plain projection.
-        return encoded.select(
+        features = encoded.select(
             F.col(self.id_col),
             *[
                 F.col(c).cast("double").alias(c)
                 for c in encoded.columns
-                if c != self.id_col
+                if c != self.id_col and c not in missing.values()
             ],
+            *missing.values(),
         )
+        return features, ranges
+
+    def _profile(self) -> dict:
+        """One bounded pass over ``input_data`` (one Spark action): the row
+        ``total``, every data column's ``observed`` count, the min/max of
+        ``cast(double)`` of every non-categorical FEATURE column
+        (``ranges``; other columns may have types with no cast to double),
+        and each categorical column's sorted observed values
+        (``domains``), capped at ``class_threshold + 1`` — enough to fail
+        the gate."""
+        cols = self._data_cols()
+        cats = [c for c in cols if c in self.categorical]
+        conts = [c for c in self._feature_cols() if c not in cats]
+        profile = {
+            "total": 0,
+            "observed": dict.fromkeys(cols, 0),
+            "ranges": dict.fromkeys(conts, (None, None)),
+            "domains": {c: [] for c in cats},
+        }
+        with _job_phase(self.input_data.sparkSession, "imputer:profile"):
+            rows = self._profile_query(cols, cats, conts).collect()
+        for r in rows:
+            if r["k"] < 0:
+                profile["total"] = r["n"]
+                profile["observed"] = {c: r[f"o{j}"] for j, c in enumerate(cols)}
+                profile["ranges"] = {
+                    c: (r[f"lo{j}"], r[f"hi{j}"]) for j, c in enumerate(conts)
+                }
+            else:
+                profile["domains"][cats[r["k"]]].append(r[f"v{r['k']}"])
+        for values in profile["domains"].values():
+            values.sort()
+        return profile
+
+    def _profile_query(
+        self, cols: list[str], cats: list[str], conts: list[str]
+    ) -> DataFrame:
+        """Each row explodes into a totals struct (tag ``k = -1``: non-null
+        flags, continuous values) and one struct per non-null categorical
+        cell (tag ``k`` = index in ``cats``, value in ``v{k}`` with its
+        column's type). One aggregate grouped by ``(k, v…)`` yields the
+        totals row and every distinct categorical value; the
+        ``row_number() <= cap`` filter per tag is planned as a
+        per-partition group limit before the shuffle, so at most
+        ``1 + Σ cap`` rows reach the driver, whatever the cardinality."""
+        cap = self.class_threshold + 1
+        types = {f.name: f.dataType for f in self.input_data.schema.fields}
+        v = [f"v{j}" for j in range(len(cats))]
+
+        def tagged(k, value=None, totals=False):
+            def field(name, expr, dtype, keep):
+                return (expr if keep else F.lit(None)).cast(dtype).alias(name)
+
+            return F.struct(
+                F.lit(k).alias("k"),
+                *[
+                    field(name, F.col(c), types[c], c == value)
+                    for c, name in zip(cats, v)
+                ],
+                *[
+                    field(f"o{j}", F.col(c).isNotNull(), "long", totals)
+                    for j, c in enumerate(cols)
+                ],
+                *[
+                    field(f"x{j}", F.col(c).try_cast("double"), "double", totals)
+                    for j, c in enumerate(conts)
+                ],
+            )
+
+        structs = [tagged(-1, totals=True)] + [
+            F.when(F.col(c).isNotNull(), tagged(i, value=c))
+            for i, c in enumerate(cats)
+        ]
+        grouped = (
+            self.input_data.select(F.explode(F.array(*structs)).alias("s"))
+            .filter(F.col("s").isNotNull())
+            .select("s.*")
+            .groupBy("k", *v)
+            .agg(
+                F.count(F.lit(1)).alias("n"),
+                *[F.sum(f"o{j}").alias(f"o{j}") for j in range(len(cols))],
+                *[F.min(f"x{j}").alias(f"lo{j}") for j in range(len(conts))],
+                *[F.max(f"x{j}").alias(f"hi{j}") for j in range(len(conts))],
+            )
+        )
+        w = Window.partitionBy("k").orderBy(*(v or ["k"]))
+        return grouped.withColumn("rn", F.row_number().over(w)).filter(
+            F.col("rn") <= cap
+        )
+
+    def _to_impute(self, profile: dict) -> list[str]:
+        """Data columns with at least one missing cell, in column order."""
+        return [
+            c for c in self._data_cols()
+            if profile["observed"][c] < profile["total"]
+        ]
 
     # ------------------------------------------------------------------ C5
     def fit(
@@ -219,19 +350,32 @@ class SparkImputer:
         different targets warrant different models (extends the
         reference's one-estimator-for-all-columns surface, :241-245).
         ``scaler`` defaults to the pure-SQL min-max scaler; pass a callable
-        ``(df, cols) -> df`` to substitute.
+        ``(df, cols) -> df`` to substitute (like the default, it must pass
+        the other columns through).
 
         Per-column models are INDEPENDENT (reference runs them in a
         sequential loop, :216); ``parallelism`` > 1 trains them from a
         driver thread pool so the many small Spark jobs overlap instead of
-        serializing on scheduling latency. Results are deterministic:
-        imputation updates still apply in column order.
+        serializing on scheduling latency. Results are deterministic.
+        With ``transform=True`` every column's predictions are written back
+        in one join; each column's ``impute_time`` is the time to build
+        that shared write-back plan.
         """
         start_overall = time.time()
+        spark = self.input_data.sparkSession
 
-        all_features = self.create_features()
-        feat_cols = [c for c in all_features.columns if c != self.id_col]
-        scale = scaler or minmax_scale
+        profile = self._profile()
+        to_impute = self._to_impute(profile)
+        missing = _missing_flags(to_impute) if transform else {}
+        all_features, ranges = self._features(profile, missing)
+        feat_cols = [
+            c for c in all_features.columns
+            if c != self.id_col and c not in missing.values()
+        ]
+        if scaler is None:
+            scaled = minmax_scale(all_features, feat_cols, ranges=ranges)
+        else:
+            scaled = scaler(all_features, feat_cols)
         # Eager materialization, not a lazy cache(): the per-column fits
         # run CONCURRENTLY from the thread pool below, and a lazy cache
         # fills per-partition with no cross-thread synchronization — all
@@ -241,16 +385,14 @@ class SparkImputer:
         # At 100 TB this is the feature-matrix materialization every
         # production imputation run makes anyway; the checkpointed RDD is
         # released by ContextCleaner when the frame goes out of scope.
-        features = scale(all_features, feat_cols).localCheckpoint(eager=True)
-
-        info = self.missing_metrics().filter(F.col("missing") > 0)
-        to_impute = [r["variable"] for r in info.select("variable").collect()]
+        with _job_phase(spark, "imputer:features"):
+            features = scaled.localCheckpoint(eager=True)
 
         def train(column: str) -> dict:
             start_time = time.time()
             record = self._fit_one(
-                column, features, classification, regression, test_size,
-                random_seed,
+                column, features, feat_cols, classification, regression,
+                test_size, random_seed, profile["domains"].get(column),
             )
             record["train_time"] = time.time() - start_time
             return record
@@ -266,13 +408,14 @@ class SparkImputer:
         else:
             trained_models = {c: train(c) for c in to_impute}
 
-        imputed = self.input_data if transform else None
         if transform:
+            start_imp = time.time()
+            imputed = self._write_back(
+                features, trained_models, missing, profile
+            )
+            impute_time = time.time() - start_imp
             for column in to_impute:
-                record = trained_models[column]
-                start_imp = time.time()
-                imputed = self._impute_column(imputed, column, features, record)
-                record["impute_time"] = time.time() - start_imp
+                trained_models[column]["impute_time"] = impute_time
 
         trained_models["global_scaler"] = {"type": "minmax", "columns": feat_cols}
 
@@ -287,21 +430,21 @@ class SparkImputer:
         return trained_models
 
     def _fit_one(
-        self, column, features, classification, regression, test_size,
-        random_seed,
+        self, column, features, feat_cols, classification, regression,
+        test_size, random_seed, domain,
     ) -> dict:
-        """Train + hold-out-score the model for one target column."""
+        """Train + hold-out-score the model for one target column;
+        ``domain`` is the profile's capped label domain when the target is
+        categorical."""
         from pyspark.ml import Pipeline
         from pyspark.ml.feature import VectorAssembler
 
         is_cat = column in self.categorical
+        spark = features.sparkSession
         # Leakage prune replicates the reference's SUBSTRING semantics
         # (reference :236 — drops the target, its one-hot/flag derivatives,
         # and any accidental substring match; SURVEY.md P8).
-        model_features = [
-            c for c in features.columns
-            if c != self.id_col and column not in c
-        ]
+        model_features = [c for c in feat_cols if column not in c]
 
         target = self.input_data.select(
             F.col(self.id_col), F.col(column).alias("__target")
@@ -309,24 +452,18 @@ class SparkImputer:
         observed = target.filter(F.col("__target").isNotNull())
 
         if is_cat:
-            # Bounded label collect: features are gated by class_threshold
-            # at construction, but the TARGET's label domain is collected
-            # here — cap it the same way so a high-cardinality categorical
-            # target fails fast instead of OOMing the driver. limit(T+1)
-            # bounds both the job output and driver memory; when the
-            # distinct count is within the gate, the limit is not reached
-            # and the collect is exact.
-            cap = self.class_threshold
-            distinct = (
-                observed.select("__target").distinct().limit(cap + 1).collect()
-            )
-            if len(distinct) > cap:
+            # The features are gated by class_threshold at construction;
+            # gate the TARGET's label domain the same way so a
+            # high-cardinality target fails fast. The profile capped the
+            # domain at class_threshold + 1, so within the gate it is exact.
+            if len(domain) > self.class_threshold:
                 raise ValueError(
                     f"categorical target '{column}' has more than "
-                    f"{cap} distinct values (class_threshold); raise "
-                    f"class_threshold or drop the column"
+                    f"{self.class_threshold} distinct values "
+                    f"(class_threshold); raise class_threshold or drop the "
+                    f"column"
                 )
-            labels = sorted(r[0] for r in distinct)
+            labels = domain
             encoded, _ = label_encode(
                 observed, "__target", labels=labels, out_col="label"
             )
@@ -337,9 +474,6 @@ class SparkImputer:
                 self.id_col, F.col("__target").cast("double").alias("label")
             )
 
-        train_keys, test_keys = split_exact(
-            observed, test_size, random_seed, self.id_col
-        )
         assembler = VectorAssembler(
             inputCols=model_features, outputCol="__vec", handleInvalid="keep"
         )
@@ -360,8 +494,12 @@ class SparkImputer:
                 [len(model_features), max(4, 2 * len(labels)), len(labels)]
             )
 
-        train = train_keys.join(features, on=self.id_col, how="inner")
-        pipeline_model = Pipeline(stages=[assembler, est]).fit(train)
+        with _job_phase(spark, f"imputer:fit:{column}"):
+            train_keys, test_keys = split_exact(
+                observed, test_size, random_seed, self.id_col
+            )
+            train = train_keys.join(features, on=self.id_col, how="inner")
+            pipeline_model = Pipeline(stages=[assembler, est]).fit(train)
 
         start_test = time.time()
         test = test_keys.join(features, on=self.id_col, how="inner")
@@ -371,15 +509,13 @@ class SparkImputer:
             pred_col = F.bround(pred_col)  # np.round = half-to-even
         scored = preds.select(F.col("label"), pred_col.alias("prediction"))
         if is_cat:
-            perf = scored.agg(
-                F.avg((F.col("prediction") == F.col("label")).cast("double"))
-            ).collect()[0][0]
-            model_performance = {"accuracy": perf}
+            metric = "accuracy"
+            perf = F.avg((F.col("prediction") == F.col("label")).cast("double"))
         else:
-            perf = scored.agg(
-                F.avg(F.pow(F.col("prediction") - F.col("label"), 2))
-            ).collect()[0][0]
-            model_performance = {"mse": perf}
+            metric = "mse"
+            perf = F.avg(F.pow(F.col("prediction") - F.col("label"), 2))
+        with _job_phase(spark, f"imputer:score:{column}"):
+            model_performance = {metric: scored.agg(perf).collect()[0][0]}
         test_time = time.time() - start_test
 
         return {
@@ -390,30 +526,83 @@ class SparkImputer:
             "model_performance": model_performance,
         }
 
-    def _impute_column(
-        self, imputed: DataFrame, column: str, features: DataFrame, record: dict
+    def _write_back(
+        self, features: DataFrame, models: dict, missing: dict,
+        profile: dict,
     ) -> DataFrame:
-        """Predict the missing rows of one column and scatter-update them
-        into the running imputed frame (reference :261-272)."""
-        missing_keys = self.input_data.filter(F.col(column).isNull()).select(
-            self.id_col
-        )
-        impute_rows = missing_keys.join(features, on=self.id_col, how="inner")
-        preds = record["trained_model"].transform(impute_rows)
-        pred = F.col("prediction")
-        if column in self.round_column:
-            pred = F.bround(pred)
-        preds = preds.select(F.col(self.id_col), pred.alias("prediction"))
-        if record["label_encoder"] is not None:
-            preds = label_decode(
-                preds, "prediction", record["label_encoder"]
+        """Write every column's predictions into its missing cells with ONE
+        left join against the base (reference :261-272 assigns per column).
+        ``missing`` maps each column to its is-null flag in ``features``
+        (``_features(missing=...)``), so each model scores only its own
+        column's missing rows, as the reference does, with no join; the
+        per-column predictions are merged by id into one update frame
+        (union + groupBy). Coalesce keeps every observed cell.
+
+        The planner cannot size the update frame (it sits on model UDFs
+        over checkpointed RDDs) and would shuffle the whole base for a
+        sort-merge join. The profile bounds it instead: at most Σ missing
+        cells rows, so it is broadcast when that bound × row size fits
+        ``spark.sql.autoBroadcastJoinThreshold``; else the planner's
+        shuffle join runs."""
+        base = self.input_data
+        columns = list(missing)
+        if not columns:
+            return base
+        spark = base.sparkSession
+        types = dict(base.dtypes)
+        name = {c: f"__pred_{i}" for i, c in enumerate(columns)}
+        with _job_phase(spark, "imputer:writeback"):
+            parts = []
+            for column in columns:
+                record = models[column]
+                own = features.filter(F.col(missing[column]))
+                pred = F.col("prediction")
+                if column in self.round_column:
+                    pred = F.bround(pred)
+                preds = record["trained_model"].transform(own).select(
+                    F.col(self.id_col), pred.alias("prediction")
+                )
+                if record["label_encoder"] is not None:
+                    preds = label_decode(
+                        preds, "prediction", record["label_encoder"]
+                    )
+                parts.append(
+                    preds.select(
+                        F.col(self.id_col),
+                        *[
+                            (
+                                F.col("prediction")
+                                if c == column
+                                else F.lit(None)
+                            ).cast(types[c]).alias(name[c])
+                            for c in columns
+                        ],
+                    )
+                )
+            updates = reduce(DataFrame.union, parts)
+            if len(parts) > 1:
+                # An id holds at most one prediction per column.
+                updates = updates.groupBy(self.id_col).agg(
+                    *[F.max(n).alias(n) for n in name.values()]
+                )
+            missing = sum(profile["total"] - profile["observed"][c] for c in columns)
+            # Spark's own per-row size estimate: 8 bytes of row overhead
+            # plus each field's default size.
+            row_bytes = 8 + updates._jdf.schema().defaultSize()
+            threshold = (
+                spark._jsparkSession.sessionState().conf().autoBroadcastJoinThreshold()
             )
-        target_type = dict(self.input_data.dtypes)[column]
-        updates = preds.select(
-            F.col(self.id_col),
-            F.col("prediction").cast(target_type).alias(column),
-        )
-        return scatter_update(imputed, updates, self.id_col, column)
+            if missing * row_bytes <= threshold:
+                updates = F.broadcast(updates)
+            joined = base.join(updates, on=self.id_col, how="left")
+            return joined.select(
+                *[
+                    F.coalesce(F.col(c), F.col(name[c])).alias(c)
+                    if c in name
+                    else F.col(c)
+                    for c in base.columns
+                ]
+            )
 
     def _save_models(self, trained_models: dict, feat_cols: list[str]) -> None:
         """MLlib writers + JSON manifest replace the joblib pickle
@@ -455,7 +644,9 @@ class SparkImputer:
         """Impute using saved models (reference :306-360). Replicates the
         reference's observable quirk of RE-FITTING the scaler on the current
         data (reference :323 — the persisted scaler's ranges are never
-        reused), which here is simply scaling against current min/max."""
+        reused), which here is simply scaling against current min/max.
+        Every column is written back in one join; each column's entry in
+        ``impute_times`` is the time to build that shared plan."""
         start_overall = time.time()
         trained = self._load_models()
         to_impute = [
@@ -463,22 +654,25 @@ class SparkImputer:
             and c in self.input_data.columns
         ]
 
-        all_features = self.create_features()
-        feat_cols = [c for c in all_features.columns if c != self.id_col]
-        features = minmax_scale(all_features, feat_cols).cache()
+        profile = self._profile()
+        missing = _missing_flags(to_impute)
+        all_features, ranges = self._features(profile, missing)
+        feat_cols = [
+            c for c in all_features.columns
+            if c != self.id_col and c not in missing.values()
+        ]
+        # Each model's assembler reads exactly its saved feature list
+        # (reference :339-340, SURVEY.md P10). Every column's scoring frame
+        # reads the features, so several columns share one eager
+        # materialization (see ``fit``); a single column reads them once.
+        features = minmax_scale(all_features, feat_cols, ranges=ranges)
+        if len(to_impute) > 1:
+            with _job_phase(self.input_data.sparkSession, "imputer:features"):
+                features = features.localCheckpoint(eager=True)
 
-        impute_times: dict = {}
-        imputed = self.input_data
-        for column in to_impute:
-            start = time.time()
-            record = trained[column]
-            # Re-project to exactly the saved model's feature list
-            # (reference :339-340, SURVEY.md P10).
-            feats = features.select(self.id_col, *record["model_features"])
-            imputed = self._impute_column(imputed, column, feats, record)
-            impute_times[column] = time.time() - start
-
-        features.unpersist()
+        start = time.time()
+        imputed = self._write_back(features, trained, missing, profile)
+        impute_times = dict.fromkeys(to_impute, time.time() - start)
         return {
             "imputed_data": imputed,
             "impute_times": impute_times,
@@ -536,9 +730,10 @@ class SparkImputer:
             include_missing_flags=self.include_missing_flags,
             id_col=self.id_col,
         )
-        all_features = holdout.create_features()
+        all_features, ranges = holdout._features(holdout._profile())
         feat_cols = [c for c in all_features.columns if c != self.id_col]
-        features = minmax_scale(all_features, feat_cols).cache()
+        features = minmax_scale(all_features, feat_cols, ranges=ranges).cache()
+        spark = validation_set.sparkSession
 
         output = {}
         for column in to_impute:
@@ -557,22 +752,17 @@ class SparkImputer:
             if column in self.categorical:
                 labels = record["label_encoder"]
                 preds = label_decode(preds, "prediction", labels)
-                acc = preds.agg(
-                    F.avg(
-                        (F.col("prediction") == F.col("__truth")).cast("double")
-                    )
-                ).collect()[0][0]
-                model_performance = {"accuracy": acc}
+                metric = "accuracy"
+                perf = F.avg(
+                    (F.col("prediction") == F.col("__truth")).cast("double")
+                )
             else:
-                mse = preds.agg(
-                    F.avg(
-                        F.pow(
-                            F.col("prediction") - F.col("__truth").cast("double"),
-                            2,
-                        )
-                    )
-                ).collect()[0][0]
-                model_performance = {"mse": mse}
+                metric = "mse"
+                perf = F.avg(
+                    F.pow(F.col("prediction") - F.col("__truth").cast("double"), 2)
+                )
+            with _job_phase(spark, f"imputer:score:{column}"):
+                model_performance = {metric: preds.agg(perf).collect()[0][0]}
             output[column] = {
                 "model_performance": model_performance,
                 "test_time": time.time() - start,
@@ -588,8 +778,7 @@ class SparkImputer:
         model size, per-column mse/accuracy; rank every metric
         (pandas-average-rank semantics) and sum the performance ranks."""
         spark = self.input_data.sparkSession
-        info = self.missing_metrics().filter(F.col("missing") > 0)
-        to_impute = [r["variable"] for r in info.select("variable").collect()]
+        to_impute = self._to_impute(self._profile())
         mse_cols = [f"{c}_mse" for c in to_impute if c not in self.categorical]
         acc_cols = [f"{c}_accuracy" for c in to_impute if c in self.categorical]
 
@@ -666,6 +855,34 @@ class SparkImputer:
     # ------------------------------------------------------------------ util
     def _data_cols(self) -> list[str]:
         return [c for c in self.input_data.columns if c != self.id_col]
+
+    def _feature_cols(self) -> list[str]:
+        """The columns ``create_features`` reads: ``features``, or every
+        data column when it is unset."""
+        if self.features:
+            return [c for c in self.features if c != self.id_col]
+        return self._data_cols()
+
+
+def _missing_flags(columns: list[str]) -> dict[str, str]:
+    """Names of the is-null flags that ``_features`` carries for the
+    write-back, one per column to impute."""
+    return {c: f"__missing_{i}" for i, c in enumerate(columns)}
+
+
+@contextmanager
+def _job_phase(spark, name: str):
+    """Tag the Spark jobs this thread submits with ``name`` (their
+    ``spark.job.description`` in the UI and the event log), then restore
+    the previous tag. Local properties are per thread, so thread-pool
+    workers tag their own jobs."""
+    sc = spark.sparkContext
+    previous = sc.getLocalProperty("spark.job.description")
+    sc.setLocalProperty("spark.job.description", name)
+    try:
+        yield
+    finally:
+        sc.setLocalProperty("spark.job.description", previous)
 
 
 def _resolve_estimator(spec, column: str):

@@ -112,7 +112,37 @@ SLOW_NODES = {
 }
 
 
+# Every test name in each collected file, before any -k or node-id
+# selection narrows ``items`` ("<file basename>" -> names).
+_COLLECTED_NAMES: dict[str, set[str]] = {}
+
+
+def pytest_collectreport(report):
+    for node in report.result:
+        if isinstance(node, pytest.Item):
+            _COLLECTED_NAMES.setdefault(
+                os.path.basename(str(node.fspath)), set()
+            ).add(node.name)
+
+
+def _stale_slow_nodes() -> list[str]:
+    """SLOW_NODES keys that name no test of a collected file (a renamed or
+    deleted test would otherwise leave the slow tier silently). Files that
+    were not collected are not checked, so running one file still works."""
+    stale = []
+    for key in sorted(SLOW_NODES):
+        fname, name = key.split("::", 1)
+        if fname in _COLLECTED_NAMES and name not in _COLLECTED_NAMES[fname]:
+            stale.append(key)
+    return stale
+
+
 def pytest_collection_modifyitems(config, items):
+    stale = _stale_slow_nodes()
+    if stale:
+        raise pytest.UsageError(
+            "SLOW_NODES names tests that do not exist: " + ", ".join(stale)
+        )
     # Two-tier suite (VERDICT r14 #1): the default run must finish well
     # inside the driver's capture window; the slow tier is never deleted,
     # only skipped, and runs in full with --runslow / SPARK_GRAFT_SLOW_TESTS=1.

@@ -456,3 +456,293 @@ def test_multiple_impute_rubins_variance(spark):
     rows = {r["variable"]: r["imputation_variance"] for r in var.collect()}
     for c in ("km2", "gdp_per_capita", "Location"):
         assert c in rows and rows[c] is not None and rows[c] >= 0.0
+
+
+# ------------------------------------------------------------ profile pass
+def _assert_same_frame(a, b):
+    assert a.columns == b.columns
+    assert a.exceptAll(b).count() == 0
+    assert b.exceptAll(a).count() == 0
+
+
+def _generated_frame(spark):
+    """A numeric categorical (double levels), a single-level categorical,
+    an all-null continuous column and a continuous column with gaps."""
+    from pyspark.sql.types import (
+        DoubleType,
+        LongType,
+        StringType,
+        StructField,
+        StructType,
+    )
+
+    schema = StructType(
+        [
+            StructField("id", LongType(), False),
+            StructField("num_cat", DoubleType(), True),
+            StructField("one_level", StringType(), True),
+            StructField("empty", DoubleType(), True),
+            StructField("x", DoubleType(), True),
+        ]
+    )
+    rows = [
+        (i, [0.0, 1.0, 2.0, None][i % 4], None if i % 3 == 0 else "only",
+         None, None if i % 5 == 0 else float(i * i % 17) - 4.5)
+        for i in range(1, 25)
+    ]
+    return spark.createDataFrame(rows, schema)
+
+
+@pytest.mark.parametrize(
+    "case", ["plain", "missing_flags", "features_subset", "generated"]
+)
+def test_minmax_ranges_equal_stats(spark, territories, tmp_path, case):
+    """The profile's ranges are exact: scaling with them equals scaling
+    with the in-plan min/max aggregate, row for row and column for
+    column."""
+    from scikit_learn_imputer_spark.operators.scale import minmax_scale
+
+    if case == "generated":
+        imp = SparkImputer(
+            _generated_frame(spark),
+            categorical=["num_cat", "one_level"],
+            save_models_to=str(tmp_path / "m"),
+            include_missing_flags=True,
+            id_col="id",
+        )
+    else:
+        kw = {
+            "plain": {},
+            "missing_flags": dict(include_missing_flags=True),
+            "features_subset": dict(
+                features=["km2", "Location"], include_missing_flags=True
+            ),
+        }[case]
+        imp = _imputer(territories, tmp_path, **kw)
+    af, ranges = imp._features(imp._profile())
+    cols = [c for c in af.columns if c != "id"]
+    assert sorted(ranges) == sorted(cols)
+    _assert_same_frame(
+        minmax_scale(af, cols, ranges=ranges), minmax_scale(af, cols)
+    )
+
+
+def test_categorical_target_above_threshold_raises(spark, tmp_path):
+    """A categorical TARGET whose observed domain exceeds class_threshold
+    fails fast, naming the column."""
+    from pyspark.ml.classification import LogisticRegression
+    from pyspark.ml.regression import LinearRegression
+
+    df = spark.createDataFrame(
+        [(i, None if i % 7 == 0 else f"c{i}", float(i)) for i in range(40)],
+        "id long, label string, x double",
+    )
+    imp = SparkImputer(
+        df,
+        categorical=["label"],
+        save_models_to=str(tmp_path / "m"),
+        class_threshold=5,
+        id_col="id",
+    )
+    with pytest.raises(ValueError, match="'label' has more than 5 distinct"):
+        imp.fit(LogisticRegression(maxIter=2), LinearRegression(), parallelism=1)
+
+
+def test_profile_domain_query_is_bounded(spark, tmp_path):
+    """A high-cardinality categorical feature is still pruned, and the
+    domain query is bounded in the plan: a row_number() <= cap+1 filter
+    planned as a WindowGroupLimit, no collect_set/collect_list, and at
+    most cap+1 rows per categorical column (plus one totals row) reach the
+    driver."""
+    df = spark.createDataFrame(
+        [(i, f"v{i:03d}", ["a", "b", None][i % 3], float(i)) for i in range(300)],
+        "id long, many string, few string, x double",
+    )
+    imp = SparkImputer(
+        df,
+        categorical=["many", "few"],
+        save_models_to=str(tmp_path / "m"),
+        class_threshold=10,
+        id_col="id",
+    )
+    query = imp._profile_query(["many", "few", "x"], ["many", "few"], ["x"])
+    plan = query._jdf.queryExecution().executedPlan().toString()
+    assert "WindowGroupLimit" in plan
+    assert "row_number()" in plan
+    assert "<= 11" in plan
+    assert "collect_set" not in plan and "collect_list" not in plan
+    assert query.count() <= 1 + 2 * 11
+
+    profile = imp._profile()
+    assert profile["domains"]["many"] == [f"v{i:03d}" for i in range(11)]
+    assert profile["domains"]["few"] == ["a", "b"]
+    assert profile["total"] == 300 and profile["observed"]["few"] == 200
+    assert profile["ranges"]["x"] == (0.0, 299.0)
+    feats = imp.create_features()
+    assert feats.columns == ["id", "x", "few_a", "few_b"]
+
+
+def _final_outer_joins(df):
+    """Run ``df`` and return (join line, left child line) for each left
+    outer join of its final (adaptive) physical plan, which shows the
+    strategy the planner and AQE chose."""
+    df.collect()
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    lines = plan.split("== Initial Plan ==")[0].splitlines()
+    return [
+        (ln, lines[i + 1]) for i, ln in enumerate(lines) if "LeftOuter" in ln
+    ]
+
+
+def test_writeback_is_one_join_and_bounded_broadcast(
+    spark, territories, tmp_path, monkeypatch
+):
+    """Every imputed column is written back by ONE left join against the
+    base. The update side is broadcast when its profiled bound fits
+    autoBroadcastJoinThreshold (territories, default threshold), so the
+    base is read in place, and not when the threshold is below the bound.
+    Without the imputer's hint the planner cannot size the update side: it
+    plans a sort-merge join, and although AQE turns it into a broadcast
+    join once the update side has run, the base has been shuffled by then.
+    The imputer restores the caller's job description."""
+    from scikit_learn_imputer_spark import imputer as imputer_module
+    from scikit_learn_imputer_spark.estimators import (
+        DummyClassifier,
+        DummyRegressor,
+    )
+
+    with_nulls = territories.withColumn(
+        "population",
+        F.when(F.col("id") % 5 == 0, None).otherwise(
+            F.col("population").cast("double")
+        ),
+    )
+    sc = spark.sparkContext
+    key = "spark.sql.autoBroadcastJoinThreshold"
+    previous = spark.conf.get(key)
+    sc.setJobDescription("caller")
+    try:
+        joins = {}
+        for name, df, threshold in [
+            ("three", territories, previous),
+            ("four", with_nulls, previous),
+            ("lowered", territories, "16"),
+            ("unhinted", territories, previous),
+        ]:
+            spark.conf.set(key, threshold)
+            if name == "unhinted":
+                monkeypatch.setattr(imputer_module.F, "broadcast", lambda df: df)
+            res = _imputer(df, tmp_path).fit(
+                DummyClassifier(strategy="most_frequent"),
+                DummyRegressor(strategy="mean"),
+                transform=True,
+                parallelism=2,
+            )
+            assert sc.getLocalProperty("spark.job.description") == "caller"
+            out = res["imputed_data"]
+            assert out.columns == df.columns
+            assert out.filter(
+                " OR ".join(f"{c} IS NULL" for c in out.columns)
+            ).count() == 0
+            joins[name] = _final_outer_joins(out)
+    finally:
+        spark.conf.set(key, previous)
+        sc.setJobDescription(None)
+        monkeypatch.undo()
+
+    assert all(len(j) == 1 for j in joins.values()), joins
+    for name in ("three", "four"):
+        join, base_side = joins[name][0]
+        assert "BroadcastHashJoin" in join
+        assert "ShuffleRead" not in base_side, base_side
+        assert "Exchange" not in base_side, base_side
+    assert "BroadcastHashJoin" not in joins["lowered"][0][0]
+    assert "ShuffleRead" in joins["unhinted"][0][1], joins["unhinted"]
+
+
+def test_stratified_draws_independent_across_columns(spark, tmp_path):
+    """Each model scores its own column's missing rows, so two categorical
+    targets imputed by the same seeded stratified model do not share one
+    uniform draw per row: on rows missing both, the imputed class indices
+    must not all agree."""
+    from scikit_learn_imputer_spark.estimators import (
+        DummyClassifier,
+        DummyRegressor,
+    )
+
+    n = 400
+    df = spark.createDataFrame(
+        [
+            (
+                i,
+                None if i % 3 == 0 else f"a{i % 5}",
+                None if i % 3 == 0 or i % 7 == 0 else f"b{i % 5}",
+                float(i),
+            )
+            for i in range(n)
+        ],
+        "id long, a string, b string, x double",
+    )
+    out = SparkImputer(
+        df,
+        categorical=["a", "b"],
+        save_models_to=str(tmp_path / "m"),
+        id_col="id",
+    ).fit(
+        DummyClassifier(strategy="stratified", seed=42),
+        DummyRegressor(strategy="mean"),
+        transform=True,
+        parallelism=1,
+    )["imputed_data"]
+    both = out.filter(F.col("id") % 3 == 0).collect()
+    assert len(both) == len(range(0, n, 3))
+    assert {r["a"][0] for r in both} == {"a"}
+    assert {r["b"][0] for r in both} == {"b"}
+    # Five near-uniform classes: independent draws agree on about a fifth
+    # of the rows (23 of 134 here); one shared draw agreed on 72.
+    agree = sum(r["a"][1:] == r["b"][1:] for r in both)
+    assert agree < len(both) / 3, agree
+
+
+def test_profile_skips_non_feature_columns(spark, tmp_path):
+    """Columns outside ``features=`` are only counted: a complete date,
+    binary and array column (no cast to double) does not break the
+    profile, the features or the fit."""
+    import datetime
+
+    from pyspark.ml.classification import LogisticRegression
+    from pyspark.ml.regression import LinearRegression
+
+    df = spark.createDataFrame(
+        [
+            (
+                i,
+                datetime.date(2020, 1, 1) + datetime.timedelta(days=i),
+                bytearray([i % 256]),
+                [i, i + 1],
+                None if i % 4 == 0 else ["u", "v"][i % 2],
+                None if i % 5 == 0 else float(i),
+            )
+            for i in range(40)
+        ],
+        "id long, day date, raw binary, arr array<int>, c string, x double",
+    )
+    imp = SparkImputer(
+        df,
+        categorical=["c"],
+        save_models_to=str(tmp_path / "m"),
+        features=["c", "x"],
+        id_col="id",
+    )
+    profile = imp._profile()
+    assert sorted(profile["ranges"]) == ["x"]
+    assert profile["observed"]["day"] == 40 and profile["observed"]["c"] == 30
+    assert imp.create_features().columns == ["id", "x", "c_u", "c_v"]
+    out = imp.fit(
+        LogisticRegression(maxIter=5), LinearRegression(maxIter=5),
+        transform=True, parallelism=1,
+    )["imputed_data"]
+    assert out.filter("c IS NULL OR x IS NULL").count() == 0
+    assert out.select("day", "raw", "arr").exceptAll(
+        df.select("day", "raw", "arr")
+    ).count() == 0

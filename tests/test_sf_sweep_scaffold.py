@@ -65,8 +65,8 @@ def test_changed_since_closure_taints_through_helpers():
     a change to the exact-rank quantile selection (functions/stats.py)
     taints the stratified sampler (operators/split.py) and through it
     every funnel/sampler query, even though none of their plan
-    functions changed directly. Probed against HEAD (empty diff -> no
-    queries) and against a synthetic taint seeded at
+    functions changed directly. Probed against a snapshot of the working
+    tree (empty diff -> no queries) and against a synthetic taint seeded at
     exact_rank_quantiles."""
     import sys
     from pathlib import Path
@@ -75,8 +75,22 @@ def test_changed_since_closure_taints_through_helpers():
     sys.path.insert(0, str(root / "tools"))
     import sf_oracle_sweep as S
 
-    # Empty diff: nothing tainted.
-    assert S.changed_queries(str(root), "HEAD") == set()
+    # Empty diff: nothing tainted. Probe against a snapshot commit of
+    # the current working tree (`git stash create` writes the object
+    # without touching refs or files), so uncommitted package edits do
+    # not make the diff non-empty; on a clean tree it prints nothing
+    # and HEAD is already the snapshot.
+    import subprocess
+
+    snapshot = (
+        subprocess.run(
+            ["git", "-c", "user.name=sweep", "-c", "user.email=sweep@localhost",
+             "-C", str(root), "stash", "create"],
+            capture_output=True, text=True, timeout=60, check=True,
+        ).stdout.strip()
+        or "HEAD"
+    )
+    assert S.changed_queries(str(root), snapshot) == set()
 
     # Seed the closure directly (monkeypatch-free: replicate the tail of
     # changed_queries over a forced seed) — the helper chain must reach
